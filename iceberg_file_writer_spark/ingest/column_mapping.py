@@ -28,6 +28,11 @@ evolution epochs => two scans, not one per file), then unionByName —
 Catalyst pushes filters/pruning through the union into each scan, so
 pushdown survives evolution.
 
+Conjunct reads go through the one scan planner
+(``file_skipping.scan_table``; ``scan_mapped_partitioned`` is its old
+name): a mapped manifest selects ``prune_entries_mapped`` as its pruning
+function and ``_scan_mapped`` as its reader.
+
 At 100 TB: evolution commits touch one manifest, zero data bytes; the
 signature-grouped read keeps scan counts at O(#epochs), not O(#files).
 
@@ -44,11 +49,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_file_writer_spark.ingest.file_skipping import _file_can_match
+from iceberg_file_writer_spark.ingest.file_skipping import (
+    _file_can_match,
+    scan_table as scan_mapped_partitioned,  # noqa: F401
+)
 from iceberg_file_writer_spark.ingest.partitioning import (
     _bucket_col_name,
     _mapped_bucket_col_name,
     bucket_of,
+    bucket_probe_safe,
     spec_source_ids,
 )
 from iceberg_file_writer_spark.ingest.snapshots import (
@@ -1044,8 +1053,8 @@ def respec_mapped(table_path: str, spec: list) -> int:
 def prune_entries_mapped(
     files: list, conjuncts: list, columns: list, spec: "list | None"
 ) -> list:
-    """The mapped per-file skipping engine shared by
-    ``scan_mapped_partitioned`` and the ``snapshot_table`` format's
+    """The mapped per-file skipping engine shared by the scan planner
+    (``file_skipping._plan_scan``) and the ``snapshot_table`` format's
     pushFilters: each conjunct's column resolves current-name -> field
     id -> THAT file's physical name (its commit-epoch stamp), so stats
     keyed under any historical — or recycled — name prune safely;
@@ -1080,16 +1089,13 @@ def prune_entries_mapped(
                 break
             n = buckets.get(fid)
             if n is not None and op in ("=", "in"):
-                if op == "=":
-                    want = [bucket_of(val, n)] if val is not None else []
-                else:
-                    want = sorted(
-                        {
-                            bucket_of(x, n)
-                            for x in (val or [])
-                            if x is not None
-                        }
-                    )
+                members = [
+                    x for x in ([val] if op == "=" else val or [])
+                    if x is not None
+                ]
+                if not all(bucket_probe_safe(x) for x in members):
+                    continue  # no faithful bucket id: cannot exclude
+                want = sorted({bucket_of(x, n) for x in members})
                 cand = [_mapped_bucket_col_name(fid, n)]
                 if phys is not None:
                     cand.append(_bucket_col_name(phys, n))
@@ -1102,67 +1108,6 @@ def prune_entries_mapped(
         if ok:
             kept.append(e)
     return kept
-
-
-def scan_mapped_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    conjuncts: list,
-    version: "int | None" = None,
-) -> DataFrame:
-    """File-skipping scan of a MAPPED table where predicates on RAW
-    (current-name) columns prune per evolution epoch AND through the
-    id-keyed spec's bucket transforms; hidden columns never surface.
-    Row-identical to ``read_mapped(...).where(residual)``.
-
-    Per file: the conjunct's column resolves current-name -> field id
-    -> that file's PHYSICAL name (its commit-epoch stamp), so stats
-    written under any historical name keep pruning after renames; time
-    transforms (day/month/year/hour/truncate) prune through those raw
-    stats with no hidden column at all. Bucket transforms check the
-    id-keyed hidden column (``_b<n>_f<id>``) and fall back to the
-    name-keyed form a pre-conversion plain writer produced
-    (``_b<n>_<phys>``) — either way the modulus is part of the key, so
-    a re-bucketed spec can never trust stale stats. Missing stats =>
-    cannot exclude. Driver-side O(files) metadata loop, zero data
-    reads before the pruned scan.
-    """
-    from iceberg_file_writer_spark.ingest.file_skipping import (
-        conjuncts_to_sql,
-    )
-
-    v = current_version(table_path) if version is None else version
-    m = read_manifest(table_path, v)
-    if "columns" not in m:
-        raise ValueError(f"{table_path} is not a column-mapped table")
-    columns = m["columns"]
-    name_to_id = {name: cid for cid, name, _t in columns}
-    for col, _op, *_rest in conjuncts:
-        if col not in name_to_id:
-            raise ValueError(f"no such column: {col}")
-    kept = prune_entries_mapped(
-        m["files"], conjuncts, columns, m.get("spec")
-    )
-    scan_mapped_partitioned.last_files = (len(kept), len(m["files"]))
-    residual = conjuncts_to_sql(conjuncts)
-    if not kept:
-        ddl = ", ".join(f"`{name}` {typ}" for _id, name, typ in columns)
-        return spark.createDataFrame([], ddl)
-    if m.get("bloom"):
-        from iceberg_file_writer_spark.ingest.bloom_index import bloom_prune
-
-        kept = bloom_prune(
-            table_path, m["bloom"], kept, conjuncts,
-            name_to_id=name_to_id,
-        )
-        scan_mapped_partitioned.last_files = (len(kept), len(m["files"]))
-        if not kept:
-            ddl = ", ".join(f"`{name}` {typ}" for _id, name, typ in columns)
-            return spark.createDataFrame([], ddl)
-    sub = dict(m)
-    sub["files"] = kept
-    out = _scan_mapped(spark, table_path, sub)
-    return out.where(residual)
 
 
 # --- row-level change feed (CDC) on mapped tables ----------------------------

@@ -18,8 +18,16 @@ prune with byte-order comparisons, matching Spark's BinaryComparison
 on StringType.
 
 Predicates are conjunction lists ``[(col, op, value), ...]`` with ops
-``< <= > >= = != isnull notnull`` — the same shapes engines push into
-scans; ``conjuncts_to_sql`` renders the residual filter.
+``< <= > >= = != isnull notnull in`` — the same shapes engines push
+into scans; ``conjuncts_to_sql`` renders the residual filter.
+
+There is ONE planner, ``_plan_scan``, behind every conjunct read
+(``scan_table`` and its old names ``partitioning.scan_partitioned`` and
+``column_mapping.scan_mapped_partitioned``, ``SnapshotTable.scan``,
+``snapshots.scan_pruned`` and the SQL surface's pruned read). It follows
+Iceberg's scan planning (https://iceberg.apache.org/spec/#scan-planning):
+the manifest of the version being read picks the layout, the layout
+picks only the pruning function, and bloom sidecars prune last.
 
 Reference scope note: the reference (/root/reference/main.go:47-54)
 writes record files with no per-file statistics; this is the metadata
@@ -27,6 +35,8 @@ index a query layer builds above that write path. [extension]
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -122,14 +132,17 @@ def prune_files_distributed(
     entries executor-side, and only survivors are collected. The inline
     tail (< one segment) prunes on the driver with the canonical loop.
 
-    The closure is self-contained (executors under a plain driver
-    session cannot import this package — the bloom-build pattern) and
-    MUST stay semantics-identical to ``_file_can_match``;
-    ``tests/test_file_skipping.py`` pins the two equal over the stats
-    edge cases."""
+    Executors under a plain driver session cannot import this package,
+    so the module rides by value (the ``avro_py`` pattern) and the
+    closure calls ``_file_can_match`` itself — one rule on both paths."""
     import json
     import os
 
+    from pyspark import cloudpickle
+
+    import iceberg_file_writer_spark.ingest.file_skipping as _self
+
+    cloudpickle.register_pickle_by_value(_self)
     conj = [
         (c[0], c[1], c[2] if len(c) > 2 else None) for c in conjuncts
     ]
@@ -144,47 +157,14 @@ def prune_files_distributed(
 
         import pandas as _pd
 
-        def can_match(stats, col, op, value):
-            if op == "in":
-                non_null = [v for v in (value or []) if v is not None]
-                if not non_null:
-                    return False
-                return any(can_match(stats, col, "=", v) for v in non_null)
-            st = stats.get(col)
-            if st is None:
-                return True
-            lo, hi, *rest = st
-            nulls = rest[0] if rest else None
-            if op == "isnull":
-                return True if nulls is None else nulls > 0
-            if op == "notnull":
-                return True
-            if not isinstance(value, type(lo)) and not (
-                isinstance(value, (int, float))
-                and isinstance(lo, (int, float))
-                and not isinstance(value, bool)
-                and not isinstance(lo, bool)
-            ):
-                return True
-            if op == "<":
-                return lo < value
-            if op == "<=":
-                return lo <= value
-            if op == ">":
-                return hi > value
-            if op == ">=":
-                return hi >= value
-            if op == "=":
-                return lo <= value <= hi
-            return not (lo == hi == value)  # op == "!="
-
         for pdf in batches:
             out = []
             for content in pdf["value"]:
                 for e in _json.loads(content):
                     st = e.get("stats", {})
                     if all(
-                        can_match(st, col, op, v) for col, op, v in conj
+                        _file_can_match(st, col, op, v)
+                        for col, op, v in conj
                     ):
                         out.append(_json.dumps(e))
             yield _pd.DataFrame({"e": out})
@@ -229,65 +209,136 @@ def conjuncts_to_sql(conjuncts: list) -> str:
     return " AND ".join(parts) if parts else "true"
 
 
+class ScanPlan(NamedTuple):
+    """What a conjunct read keeps: the resolved version, its manifest
+    (the layout only, when the distributed prune ran), the kept entries
+    and the snapshot's total entry count."""
+
+    version: int
+    manifest: dict
+    kept: list
+    total: int
+
+
+def _plan_scan(
+    spark: SparkSession,
+    table_path: str,
+    conjuncts: list,
+    version: "int | None",
+) -> ScanPlan:
+    """The one file-skipping planner. The manifest of the version being
+    read picks the layout, and the layout picks only the pruning
+    function: column-mapped tables resolve each conjunct per file
+    through field ids (``prune_entries_mapped``); plain and spec'd
+    tables prune stats on the conjuncts plus the spec's hidden bucket
+    probes (a plain table's spec is empty), on executors when a big
+    segmented manifest crosses ``DISTRIBUTED_PRUNE_THRESHOLD``. Bloom
+    sidecars then drop files the stats kept.
+
+    ``snapshots.read_manifest`` and ``prune_files`` are looked up at call
+    time, so a caller that wraps those module attributes sees every
+    planning call."""
+    from iceberg_file_writer_spark.ingest import snapshots
+    from iceberg_file_writer_spark.ingest.bloom_index import bloom_prune
+    from iceberg_file_writer_spark.ingest.partitioning import bucket_conjuncts
+
+    v = snapshots.current_version(table_path) if version is None else version
+    # One manifest read per plan once read_manifest's memo holds an
+    # inline manifest. Otherwise the raw layout says whether a big
+    # segmented manifest prunes on executors, and every other plan then
+    # resolves it through read_manifest (whose memo keeps it).
+    resolved = snapshots.manifest_memoized(table_path, v)
+    if resolved:
+        m = snapshots.read_manifest(table_path, v)
+    else:
+        m = snapshots.read_manifest_layout(table_path, v)
+    segs = m.get("segments")
+    # sealed segments hold exactly MANIFEST_SEGMENT_SIZE entries each,
+    # so the total is known without resolving any of them
+    total = (
+        len(segs) * snapshots.MANIFEST_SEGMENT_SIZE + len(m.get("tail") or [])
+        if segs
+        else len(m.get("files") or [])
+    )
+    name_to_id = None
+    if "columns" in m:
+        from iceberg_file_writer_spark.ingest.column_mapping import (
+            prune_entries_mapped,
+        )
+
+        if not resolved:
+            m = snapshots.read_manifest(table_path, v)
+        name_to_id = {name: cid for cid, name, _t in m["columns"]}
+        for col, _op, *_rest in conjuncts:
+            if col not in name_to_id:
+                raise ValueError(f"no such column: {col}")
+        kept = prune_entries_mapped(
+            m["files"], conjuncts, m["columns"], m.get("spec")
+        )
+    else:
+        probes = conjuncts + bucket_conjuncts(conjuncts, m.get("spec"))
+        if segs and conjuncts and total > DISTRIBUTED_PRUNE_THRESHOLD:
+            # big segmented manifest: executors parse + filter the sealed
+            # chunks; the driver only ever sees the survivors
+            kept = prune_files_distributed(
+                spark, table_path, segs, m.get("tail") or [], probes
+            )
+        else:
+            if not resolved:
+                m = snapshots.read_manifest(table_path, v)
+            kept = prune_files(m["files"], probes)
+    if m.get("bloom"):
+        kept = bloom_prune(
+            table_path, m["bloom"], kept, conjuncts, name_to_id=name_to_id
+        )
+    return ScanPlan(v, m, kept, total)
+
+
 def scan_table(
     spark: SparkSession,
     table_path: str,
     conjuncts: list,
     version: int | None = None,
 ) -> DataFrame:
-    """Row-identical to ``read_table_version(...).where(conjuncts)`` but
-    reads only files whose manifest stats can match. Exposes the
-    surviving/total file counts on the returned DataFrame as
-    ``scan_table.last_files = (kept, total)`` for observability."""
+    """Row-identical to the unpruned read of ``version`` filtered by
+    ``conjuncts`` — ``read_table_version`` for plain and spec'd tables,
+    ``read_mapped`` for column-mapped ones — but reads only the files
+    ``_plan_scan`` keeps; hidden layout columns never surface. Exposes
+    the kept/total file counts as ``scan_table.last_files = (kept,
+    total)`` for observability."""
+    from iceberg_file_writer_spark.ingest.column_mapping import _scan_mapped
     from iceberg_file_writer_spark.ingest.snapshots import (
-        MANIFEST_SEGMENT_SIZE,
         _read_files,
-        current_version,
-        read_manifest,
-        read_manifest_layout,
         read_table_version,
     )
 
-    v = current_version(table_path) if version is None else version
-    m = read_manifest_layout(table_path, v)
-    segs = m.get("segments")
-    # sealed segments hold exactly MANIFEST_SEGMENT_SIZE entries each,
-    # so the total is known without resolving any of them
-    total = (
-        len(segs) * MANIFEST_SEGMENT_SIZE + len(m.get("tail") or [])
-        if segs
-        else len(m.get("files") or [])
-    )
-    if segs and conjuncts and total > DISTRIBUTED_PRUNE_THRESHOLD:
-        # big segmented manifest: executors parse + filter the sealed
-        # chunks; the driver only ever sees the survivors
-        kept = prune_files_distributed(
-            spark, table_path, segs, m.get("tail") or [], conjuncts
-        )
+    plan = _plan_scan(spark, table_path, conjuncts, version)
+    m, kept = plan.manifest, plan.kept
+    scan_table.last_files = (len(kept), plan.total)
+    if "columns" in m:
+        if not kept:
+            ddl = ", ".join(f"`{n}` {typ}" for _id, n, typ in m["columns"])
+            return spark.createDataFrame([], ddl)
+        df = _scan_mapped(spark, table_path, {**m, "files": kept})
+    elif not kept or len(kept) == plan.total:
+        # no file kept: the snapshot's schema under an always-false read
+        df = read_table_version(spark, table_path, plan.version)
     else:
-        m = read_manifest(table_path, v)
-        kept = prune_files(m["files"], conjuncts)
-    if m.get("bloom"):
-        from iceberg_file_writer_spark.ingest.bloom_index import bloom_prune
-
-        kept = bloom_prune(table_path, m["bloom"], kept, conjuncts)
-    scan_table.last_files = (len(kept), total)
-    residual = conjuncts_to_sql(conjuncts)
-    if not kept:
-        # preserve the exact schema with an always-false read
-        return read_table_version(spark, table_path, v).where("false")
-    if len(kept) == total:
-        return read_table_version(spark, table_path, v).where(residual)
-    # Pruned path: the kept files must still honor the snapshot's
-    # merge-on-read deletion vectors (anti-join in _read_files) and the
-    # snapshot's FULL schema — additive evolution can leave the kept
-    # subset without a column the residual (or the caller) references,
-    # so align by adding typed NULL columns. The full schema comes from
-    # a lazy read_table_version (parquet footer metadata only — no data
-    # IO; at 100 TB the manifest would carry the schema inline).
-    pruned = _read_files(spark, table_path, kept, m.get("dvs"), eqs=m.get("eqs"))
-    full_schema = read_table_version(spark, table_path, v).schema
-    return _align_schema(pruned, full_schema).where(residual)
+        # Pruned path: the kept files must still honor the snapshot's
+        # merge-on-read deletes (applied in _read_files) and the
+        # snapshot's FULL schema — additive evolution can leave the kept
+        # subset without a column the residual (or the caller)
+        # references, so align by adding typed NULL columns. The full
+        # schema comes from a lazy read_table_version (parquet footer
+        # metadata only — no data IO).
+        full = read_table_version(spark, table_path, plan.version).schema
+        df = _align_schema(
+            _read_files(
+                spark, table_path, kept, m.get("dvs"), eqs=m.get("eqs")
+            ),
+            full,
+        )
+    return df.where(conjuncts_to_sql(conjuncts) if kept else "false")
 
 
 def _align_schema(df: DataFrame, schema) -> DataFrame:

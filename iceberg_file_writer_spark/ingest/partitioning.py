@@ -3,7 +3,10 @@
 Iceberg's insight: users query RAW columns; the table silently
 maintains a partition layout derived from transforms of them, and the
 scanner maps raw predicates onto the layout. Here the layout is
-manifest-stats file skipping (``ingest/file_skipping.py``), so:
+manifest-stats file skipping: the one scan planner
+(``file_skipping.scan_table``; ``scan_partitioned`` is its old name)
+reads the spec from the manifest and prunes a spec'd table exactly as
+a plain one, with ``bucket_conjuncts`` added to the conjuncts. So:
 
 - **time transforms** (day/month of a timestamp) need NO hidden
   column at all: clustering by the transform makes each file's RAW
@@ -48,6 +51,12 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# one planner serves every layout (plain, spec'd, column-mapped); the
+# old name stays for its callers
+from iceberg_file_writer_spark.ingest.file_skipping import (
+    scan_table as scan_partitioned,  # noqa: F401
+)
 
 # spec entry forms: ("day", col) | ("month", col) | ("bucket", n, col)
 #                 | ("zorder", [col, ...])
@@ -330,67 +339,40 @@ def commit_append_partitioned(
     )
 
 
-def scan_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    conjuncts: list,
-    version: int | None = None,
-) -> DataFrame:
-    """File-skipping scan where predicates on RAW columns also prune via
-    the spec's transforms (bucket equality); hidden columns never
-    surface. Row-identical to the unpruned filtered read."""
-    from iceberg_file_writer_spark.ingest.file_skipping import (
-        _align_schema,
-        conjuncts_to_sql,
-        prune_files,
-    )
-    from iceberg_file_writer_spark.ingest.snapshots import (
-        _read_files,
-        current_version,
-        read_manifest,
-        read_table_version,
-    )
+def bucket_probe_safe(value) -> bool:
+    """Whether ``bucket_of(value)`` hashes the string Spark's
+    ``CAST(col AS STRING)`` gives for that value. Python and Java render
+    only ints and strings alike (``str(1e7)`` is '10000000.0', Java's
+    is '1.0E7'), so only those literals may probe a bucket column — the
+    rule ``bloom_index._probe_safe`` applies to bloom probes."""
+    return isinstance(value, (int, str)) and not isinstance(value, bool)
 
-    v = current_version(table_path) if version is None else version
-    m = read_manifest(table_path, v)
-    spec = m.get("spec", [])
-    buckets = {tr[2]: tr[1] for tr in spec if tr[0] == "bucket"}
-    augmented = list(conjuncts)
+
+def bucket_conjuncts(conjuncts: list, spec: list) -> list:
+    """The hidden-column probes a NAME-keyed spec's bucket transforms add
+    to ``conjuncts``: ``col = v`` gains ``_b<n>_col = bucket(v)`` and
+    ``col IN (...)`` gains ``_b<n>_col IN (member buckets)`` (NULL
+    members never match — dropped). A literal ``bucket_probe_safe``
+    rejects adds no probe (for IN: any such member), since a wrong
+    bucket id would skip the file holding the row. The scan planner and
+    the ``snapshot_table`` format's pushFilters both prune on
+    ``conjuncts + bucket_conjuncts(conjuncts, spec)``."""
+    buckets = {tr[2]: tr[1] for tr in spec or [] if tr[0] == "bucket"}
+    out = []
     for col, op, *rest in conjuncts:
-        if op == "=" and col in buckets:
-            n = buckets[col]
-            augmented.append(
+        n = buckets.get(col)
+        if n is None or not rest:
+            continue
+        if op == "=" and bucket_probe_safe(rest[0]):
+            out.append(
                 (_bucket_col_name(col, n), "=", bucket_of(rest[0], n))
             )
-        elif op == "in" and col in buckets and rest:
-            # key-list lookup: the file must hold one of the members'
-            # bucket ids (NULL members never match — dropped)
-            n = buckets[col]
-            ids = sorted(
-                {bucket_of(v, n) for v in (rest[0] or []) if v is not None}
-            )
-            augmented.append((_bucket_col_name(col, n), "in", ids))
-    kept = prune_files(m["files"], augmented)
-    if m.get("bloom"):
-        from iceberg_file_writer_spark.ingest.bloom_index import bloom_prune
-
-        kept = bloom_prune(table_path, m["bloom"], kept, conjuncts)
-    scan_partitioned.last_files = (len(kept), len(m["files"]))
-    residual = conjuncts_to_sql(conjuncts)  # raw predicates only
-
-    def _drop_hidden(df: DataFrame) -> DataFrame:
-        return df.drop(*[c for c in df.columns if _is_hidden(c)])
-
-    full = read_table_version(spark, table_path, v)
-    if not kept:
-        return _drop_hidden(full.where("false"))
-    if len(kept) == len(m["files"]):
-        return _drop_hidden(full.where(residual))
-    # Pruned subset: DV anti-join + full-schema alignment, exactly as
-    # file_skipping.scan_table — a hidden-partition read must not
-    # resurrect merge-on-read-deleted rows or lose evolved columns.
-    pruned = _read_files(spark, table_path, kept, m.get("dvs"), eqs=m.get("eqs"))
-    return _drop_hidden(_align_schema(pruned, full.schema).where(residual))
+        elif op == "in":
+            members = [v for v in rest[0] or [] if v is not None]
+            if all(bucket_probe_safe(v) for v in members):
+                ids = sorted({bucket_of(v, n) for v in members})
+                out.append((_bucket_col_name(col, n), "in", ids))
+    return out
 
 
 def commit_respec(table_path: str, spec: list) -> int:

@@ -130,6 +130,17 @@ def read_manifest_layout(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def manifest_memoized(path: str, version: int) -> bool:
+    """Whether ``read_manifest``'s memo holds this INLINE manifest's
+    current bytes, so reading it costs no parse. Planners check this
+    before ``read_manifest_layout``: a memoized segmented manifest may
+    still want its raw segments, so it answers False."""
+    mp = _manifest_path(path, version)
+    st = os.stat(mp)
+    master = _MANIFEST_CACHE.get((mp, st.st_mtime_ns, st.st_size))
+    return master is not None and "_segments" not in master
+
+
 def read_manifest(path: str, version: int) -> dict:
     """Manifest with its full file list resolved.
 
@@ -2041,29 +2052,19 @@ def scan_pruned(
 
     This is Iceberg's planning model: the engine never lists or opens a
     non-overlapping file — at 100 TB the difference between a metadata
-    lookup and a cluster-wide listing. Files without stats are scanned
-    conservatively (they might match). Returns (df, {"files_total",
-    "files_scanned"}); the residual predicate still applies in the scan,
-    so results are exact whatever the stats say.
+    lookup and a cluster-wide listing. It is the one scan planner
+    (``file_skipping.scan_table``) under ``lo <= col <= hi``, so files
+    without stats are scanned conservatively, merge-on-read deletes and
+    evolved columns carry over, and results are exact whatever the stats
+    say. Returns (df, {"files_total", "files_scanned"}).
     """
-    v = current_version(table_path) if version is None else version
-    m = read_manifest(table_path, v)
-    files = m["files"]
-    keep = []
-    for e in files:
-        st = (e.get("stats") or {}).get(col)
-        if st is None or not (hi < st[0] or lo > st[1]):
-            keep.append(e)
-    info = {"files_total": len(files), "files_scanned": len(keep)}
-    if not keep:
-        empty = read_table_version(spark, table_path, v).where(F.lit(False))
-        return empty, info
-    # merge-on-read deletes apply to pruned reads too — skipping them
-    # here would resurrect tombstoned rows inside the kept files
-    df = _read_files(
-        spark, table_path, keep, m.get("dvs"), eqs=m.get("eqs")
-    ).where((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
-    return df, info
+    from iceberg_file_writer_spark.ingest.file_skipping import scan_table
+
+    df = scan_table(
+        spark, table_path, [(col, ">=", lo), (col, "<=", hi)], version
+    )
+    kept, total = scan_table.last_files
+    return df, {"files_total": total, "files_scanned": kept}
 
 
 def commit_analyze(

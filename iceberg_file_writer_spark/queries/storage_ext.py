@@ -674,7 +674,6 @@ def zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         t,
         [("o_orderkey", "<=", int(corners.k)), ("o_custkey", "<=", int(corners.c))],
     )
-    zorder_box_scan.last_files = scan_partitioned.last_files
     return df.select("o_orderkey", "o_custkey", "o_totalprice")
 
 
@@ -736,7 +735,6 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()[0]
     )
     df = scan_table(spark, t, [("o_orderkey", "=", int(probe))])
-    bloom_point_lookup.last_files = scan_table.last_files
     return df.select("o_orderkey", "o_custkey", "o_totalprice")
 
 
@@ -2452,8 +2450,8 @@ WHERE o_custkey = (SELECT * FROM k1)
 def sql_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Secondary-index lifecycle driven entirely as statement text:
     attach (incremental sidecar build), probe (the conservative
-    single-table substitution routes WHERE k = v through
-    scan_mapped_partitioned — zone maps + bloom exclude files before
+    single-table substitution routes WHERE k = v through the one scan
+    planner — zone maps + bloom exclude files before
     any data IO), survive a rename (sidecars key on FIELD ID), detach
     (metadata-only commit, zero bytes move). File-count reduction is
     pinned in tests/test_sql_index.py; THIS entry pins that pruning

@@ -82,8 +82,7 @@ from iceberg_file_writer_spark.ingest.file_skipping import (  # noqa: E402
     prune_files,
 )
 from iceberg_file_writer_spark.ingest.partitioning import (  # noqa: E402
-    _bucket_col_name,
-    bucket_of,
+    bucket_conjuncts,
 )
 from iceberg_file_writer_spark.ingest.snapshots import (  # noqa: E402
     CommitConflict,
@@ -1192,8 +1191,9 @@ class _SnapshotBatchReader(DataSourceReader):
 
     def pushFilters(self, filters):
         """File skipping through the format: conjuncts the manifest stats
-        understand prune the file list (same engine as scan_pruned);
-        EVERY filter is returned for Spark to re-apply row-level — the
+        understand prune the file list with the scan planner's pruning
+        functions (``file_skipping._plan_scan``); EVERY filter is
+        returned for Spark to re-apply row-level — the
         pushdown is a skipping hint, exactly parquet's PushedFilters
         contract, so correctness never depends on stats."""
         from pyspark.sql.datasource import (
@@ -1230,14 +1230,14 @@ class _SnapshotBatchReader(DataSourceReader):
                 conjuncts.append((col, "notnull"))
             elif t is In:
                 vals = [
-                    None if x is None else _stat_value(x) for x in f.values
+                    None if x is None else _stat_value(x) for x in f.value
                 ]
                 # a member whose type stats cannot normalize makes the
                 # whole list unusable (conservative); literal NULL
                 # members stay — IN-semantics drop them downstream
                 if all(
                     v is not None or x is None
-                    for v, x in zip(vals, f.values)
+                    for v, x in zip(vals, f.value)
                 ):
                     conjuncts.append((col, "in", vals))
         if conjuncts:
@@ -1254,30 +1254,12 @@ class _SnapshotBatchReader(DataSourceReader):
                     self.files, conjuncts, self.map_cols, self.spec
                 )
             else:
-                # plain spec'd table: augment equality probes with the
-                # hidden bucket column (scan_partitioned's derivation)
-                buckets = {
-                    tr[2]: tr[1] for tr in self.spec if tr[0] == "bucket"
-                }
-                aug = list(conjuncts)
-                for col, op, *rest in conjuncts:
-                    if op == "=" and col in buckets and rest[0] is not None:
-                        n = buckets[col]
-                        aug.append(
-                            (_bucket_col_name(col, n), "=",
-                             bucket_of(rest[0], n))
-                        )
-                    elif op == "in" and col in buckets and rest:
-                        n = buckets[col]
-                        ids = sorted(
-                            {
-                                bucket_of(x, n)
-                                for x in (rest[0] or [])
-                                if x is not None
-                            }
-                        )
-                        aug.append((_bucket_col_name(col, n), "in", ids))
-                self.files = prune_files(self.files, aug)
+                # plain table: the scan planner's probes — conjuncts plus
+                # the spec's hidden bucket columns (empty spec: none)
+                self.files = prune_files(
+                    self.files,
+                    conjuncts + bucket_conjuncts(conjuncts, self.spec),
+                )
         return filters
 
     def partitions(self):

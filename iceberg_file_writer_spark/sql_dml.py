@@ -142,8 +142,9 @@ table flavors.
 
 Reads: ``execute_query(spark, sql, tables)`` runs a SELECT with
 standard time-travel syntax. A single-relation SELECT whose WHERE is a
-pure conjunction reads through the file-skipping scan (zone maps +
-bloom sidecars prune files before any data IO; conservative extraction
+pure conjunction reads through the one file-skipping scan planner
+(zone maps, bucket transforms and bloom sidecars prune files before
+any data IO, for every table layout; conservative extraction
 per ingest/predicate_extract.py, row-identical by construction —
 ``execute_query.last_scan`` exposes the (kept, total) file counts).
 ``SHOW MATERIALIZED VIEWS`` / ``SHOW INDEXES ON t`` report the standing
@@ -1738,9 +1739,10 @@ def execute_query(
             ).createOrReplaceTempView(view)
             rewritten = _sub_outside_quotes(rewritten, name, view)
     # statement-level pruned scan: a single-relation SELECT whose WHERE
-    # is a pure conjunction reads through scan_table /
-    # scan_mapped_partitioned — zone maps + bloom sidecars exclude
-    # files before any data IO. The extraction is conservative by
+    # is a pure conjunction reads through the one scan planner
+    # (file_skipping.scan_table, every layout) — zone maps, the spec's
+    # bucket transforms and bloom sidecars exclude files before any
+    # data IO. The extraction is conservative by
     # contract (ingest/predicate_extract.py): any shape in doubt falls
     # back to the full read, and the statement's own WHERE always
     # re-applies in full, so substitution can never change results.
@@ -1777,6 +1779,7 @@ def _pruned_read(spark: SparkSession, path: str, conjuncts: list):
     whose type does not match the column's declared type is dropped —
     the pruners compare against CAST-style renderings, and a
     wrong-typed probe could false-negative (silently lost rows)."""
+    from iceberg_file_writer_spark.ingest.file_skipping import scan_table
     from iceberg_file_writer_spark.ingest.predicate_extract import (
         typed_conjuncts,
     )
@@ -1784,20 +1787,13 @@ def _pruned_read(spark: SparkSession, path: str, conjuncts: list):
     try:
         if _is_mapped(path):
             from iceberg_file_writer_spark.ingest.column_mapping import (
-                scan_mapped_partitioned,
                 table_columns,
             )
 
             pairs = [(name, typ) for _id, name, typ in table_columns(path)]
-            conjs = typed_conjuncts(conjuncts, pairs)
-            if not conjs:
-                return None
-            df = scan_mapped_partitioned(spark, path, conjs)
-            execute_query.last_scan = scan_mapped_partitioned.last_files
-            return df
-        from iceberg_file_writer_spark.ingest.file_skipping import scan_table
-
-        conjs = typed_conjuncts(conjuncts, _plain_type_pairs(path))
+        else:
+            pairs = _plain_type_pairs(path)
+        conjs = typed_conjuncts(conjuncts, pairs)
         if not conjs:
             return None
         df = scan_table(spark, path, conjs)

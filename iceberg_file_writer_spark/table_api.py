@@ -100,32 +100,10 @@ class SnapshotTable:
         """File-skipping read (stats + bloom + hidden transforms) —
         row-identical to ``read().where(...)``, provably fewer files.
 
-        Routing (partitioned vs plain planner) follows the manifest of
-        the version BEING read (ADVICE r9): a time-travel scan across a
-        spec change must plan with that snapshot's own layout, or
-        pruning silently degrades."""
-        from iceberg_file_writer_spark.ingest.snapshots import read_manifest
-
-        m = read_manifest(
-            self.path, self.version() if version is None else version
-        )
-        if "columns" in m:
-            # column-mapped (spec'd or not): per-epoch physical-name
-            # stats pruning + id-keyed bucket transforms + field-id
-            # bloom, surviving renames (r12)
-            from iceberg_file_writer_spark.ingest.column_mapping import (
-                scan_mapped_partitioned,
-            )
-
-            return scan_mapped_partitioned(
-                self.spark, self.path, conjuncts, version
-            )
-        if m.get("spec"):
-            from iceberg_file_writer_spark.ingest.partitioning import (
-                scan_partitioned,
-            )
-
-            return scan_partitioned(self.spark, self.path, conjuncts, version)
+        One planner serves every layout (``file_skipping.scan_table``):
+        it plans with the manifest of the version BEING read, so a
+        time-travel scan across a spec change or a column mapping uses
+        that snapshot's own layout."""
         from iceberg_file_writer_spark.ingest.file_skipping import scan_table
 
         return scan_table(self.spark, self.path, conjuncts, version)

@@ -339,6 +339,50 @@ def test_batch_reader_pushdown_skips_files(spark, tmp_path, orders):
     assert len(r2.files) == total
 
 
+def test_batch_reader_pushdown_prunes_bucket_spec(spark, tmp_path):
+    """On a bucket-spec'd plain table, the format's pushFilters keeps
+    exactly the files ``scan_table``'s planner keeps for an equality and
+    an IN probe on the bucketed column, and an IN filter reads back
+    exactly through the format."""
+    from pyspark.sql.datasource import EqualTo, In
+
+    from iceberg_file_writer_spark.ingest.file_skipping import _plan_scan
+    from iceberg_file_writer_spark.ingest.partitioning import (
+        commit_append_partitioned,
+    )
+    from iceberg_file_writer_spark.ingest.snapshots import read_manifest
+    from iceberg_file_writer_spark.sources import snapshot_stream as ss
+
+    t = str(tmp_path / "tbl")
+    df = spark.createDataFrame(
+        [(f"u{i % 97}", i) for i in range(4000)], "user_id string, v bigint"
+    )
+    commit_append_partitioned(
+        spark, df, t, [("bucket", 8, "user_id")], max_rows=100
+    )
+    files = read_manifest(t, 1)["files"]
+    for f, conj in (
+        (EqualTo(("user_id",), "u5"), [("user_id", "=", "u5")]),
+        (
+            In(("user_id",), ("u5", "u17", None)),
+            [("user_id", "in", ["u5", "u17", None])],
+        ),
+    ):
+        reader = ss._SnapshotBatchReader(df.schema, {"path": t})
+        reader.pushFilters([f])
+        got = sorted(e["path"] for e in reader.files)
+        plan = _plan_scan(spark, t, conj, None)
+        assert got == sorted(e["path"] for e in plan.kept), conj
+        assert len(got) < len(files), conj
+    # an IN filter pushed through the format reads back exactly
+    register_snapshot_source(spark)
+    n = (
+        spark.read.format("snapshot_table").option("path", t).load()
+        .where("user_id IN ('u5', 'u17')").count()
+    )
+    assert n == len([i for i in range(4000) if i % 97 in (5, 17)])
+
+
 def test_stream_passes_metadata_only_commits(spark, tmp_path, orders):
     """respec/evolve commits have an empty file diff and zero row effect:
     the stream passes them without skipNonAppends and emits nothing for

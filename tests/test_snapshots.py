@@ -270,6 +270,28 @@ def test_manifest_stats_prune_file_reads(spark, tmp_path):
     assert df0.count() == 0 and df0.columns == want.columns
 
 
+def test_scan_pruned_keeps_evolved_columns(spark, tmp_path):
+    """A pruned range scan returns the snapshot's full schema: when the
+    kept files predate an additive evolution, the newer column still
+    surfaces (NULL for those rows), as in ``read_table_version``."""
+    from iceberg_file_writer_spark.ingest.snapshots import scan_pruned
+
+    t = str(tmp_path / "tbl")
+    old = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v")
+    commit_append(spark, old.coalesce(1), t, max_rows=100)
+    new = spark.range(1000, 1100).selectExpr(
+        "id AS k", "id * 2 AS v", "'x' AS note"
+    )
+    commit_append(spark, new.coalesce(1), t, max_rows=100)
+    assert read_table_version(spark, t).columns == ["k", "v", "note"]
+
+    df, info = scan_pruned(spark, t, "k", 100, 300)
+    assert df.columns == ["k", "v", "note"]
+    assert info["files_scanned"] < info["files_total"], info
+    assert df.count() == 201
+    assert df.where("note IS NOT NULL").count() == 0
+
+
 # --- model-based property test: random op sequences vs a dict model ---------
 
 from hypothesis import HealthCheck, given, settings

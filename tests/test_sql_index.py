@@ -295,3 +295,52 @@ class TestTypedConjunctGate:
         assert [r.id for r in got] == [88]
         kept, total = execute_query.last_scan  # canonical-name rewrite
         assert kept < total
+
+
+def test_bucket_spec_prunes_sql_point_read(spark, tmp_path):
+    """A single-table SELECT on a bucket-spec'd plain table plans like
+    ``SnapshotTable.scan``: the spec's hidden bucket probe prunes files
+    that the raw column's min/max cannot."""
+    from iceberg_file_writer_spark.table_api import SnapshotTable
+
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(f"u{i % 97}", i) for i in range(4000)], "user_id string, v bigint"
+    )
+    tab = SnapshotTable.create(
+        spark, t, df, spec=[("bucket", 8, "user_id")], max_rows=100
+    )
+    tab.scan([("user_id", "=", "u5")])
+    from iceberg_file_writer_spark.ingest.partitioning import (
+        scan_partitioned,
+    )
+
+    want = scan_partitioned.last_files
+    got = execute_query(
+        spark, "SELECT * FROM t WHERE user_id = 'u5'", {"t": t}
+    ).collect()
+    assert sorted(r.v for r in got) == [i for i in range(4000) if i % 97 == 5]
+    kept, total = execute_query.last_scan
+    assert (kept, total) == want
+    assert kept < total
+
+
+def test_bucket_spec_on_double_keeps_rows_sql(spark, tmp_path):
+    """Python renders 1e7 as '10000000.0' but Spark's CAST to string
+    gives '1.0E7', so a bucket id hashed from a float literal can name
+    the wrong bucket. A SQL point read on a double bucket column must
+    still return the row: float literals add no bucket probe."""
+    from iceberg_file_writer_spark.table_api import SnapshotTable
+
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, i * 1e4) for i in range(4000)], "k bigint, d double"
+    )
+    SnapshotTable.create(spark, t, df, spec=[("bucket", 8, "d")], max_rows=100)
+    for sql, want in (
+        ("SELECT k FROM t WHERE d = 10000000", [1000]),
+        ("SELECT k FROM t WHERE d = 25000000.0", [2500]),
+        ("SELECT k FROM t WHERE d IN (10000000, 30000000)", [1000, 3000]),
+    ):
+        got = execute_query(spark, sql, {"t": t}).collect()
+        assert sorted(r.k for r in got) == want, sql
